@@ -7,7 +7,6 @@
 #                                                 #  all graft.Main flags pass through)
 #   bin/spark-submit-pipeline.sh bench            # Bench JSON (scaling + queries)
 #   bin/spark-submit-pipeline.sh verify SF OUT    # correctness dump
-#   bin/spark-submit-pipeline.sh probe N UNITS [TOKENS_SCALE]  # per-stage timings
 #
 # On a real cluster swap --master local[*] for the cluster master and drop
 # nothing else: the code never assumes local mode (all parallelism comes from
@@ -27,7 +26,6 @@ case "$MODE" in
   run)    CLASS=graft.Main;       shift || true ;;
   bench)  CLASS=graft.Bench;      shift || true ;;
   verify) CLASS=graft.Verify;     shift || true ;;
-  probe)  CLASS=graft.StageProbe; shift || true ;;
   *) echo "unknown mode $MODE" >&2; exit 2 ;;
 esac
 

@@ -63,23 +63,20 @@ final case class Manifest(
     rowCount: Long,
     stage: String
 ) {
-  def toJson: String =
-    s"""{"snapshot_id": "$snapshotId", "config_hash": "$configHash", "row_count": $rowCount, "committed_at_stage": "$stage"}"""
+  private[checkpoint] def fields: Seq[(String, Any)] = Seq("snapshot_id" -> snapshotId,
+    "config_hash" -> configHash, "row_count" -> rowCount, "committed_at_stage" -> stage)
+  def toJson: String = FsOps.renderRecord(fields: _*)
 }
 
 object Manifest {
-  private val Field = """"(\w+)"\s*:\s*(?:"([^"]*)"|(\d+))""".r
-  def fromJson(s: String): Option[Manifest] = {
-    val kv = Field.findAllMatchIn(s).map { m =>
-      m.group(1) -> Option(m.group(2)).getOrElse(m.group(3))
-    }.toMap
+  def fromJson(s: String): Option[Manifest] = fromRecord(FsOps.parseRecord(s))
+  private[checkpoint] def fromRecord(kv: Map[String, String]): Option[Manifest] =
     for {
       sid <- kv.get("snapshot_id")
       ch <- kv.get("config_hash")
       rc <- kv.get("row_count")
       st <- kv.get("committed_at_stage")
     } yield Manifest(sid, ch, rc.toLong, st)
-  }
 }
 
 /** Directory-per-stage Parquet snapshots under `root`, keyed by configHash.
@@ -124,9 +121,7 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
 
   override def load(spark: SparkSession, stage: String): Option[(DataFrame, Manifest)] = {
     val conf = hconf(spark)
-    val mp = manifestPath(stage)
-    if (!FsOps.exists(conf, mp)) return None
-    Manifest.fromJson(FsOps.readString(conf, mp))
+    FsOps.readRecord(conf, manifestPath(stage)).flatMap(Manifest.fromRecord)
       .filter(_.configHash == configHash) // stale-config snapshots are ignored
       .flatMap { m =>
         val data = new Path(stageDir(stage), m.snapshotId)
@@ -139,9 +134,7 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
     * manifest — snapshot ids are unique per commit, see commit()). */
   def metrics(spark: SparkSession, stage: String): Option[DataFrame] = {
     val conf = hconf(spark)
-    val mp = manifestPath(stage)
-    if (!FsOps.exists(conf, mp)) return None
-    Manifest.fromJson(FsOps.readString(conf, mp))
+    FsOps.readRecord(conf, manifestPath(stage)).flatMap(Manifest.fromRecord)
       .map(m => new Path(stageDir(stage), s"${m.snapshotId}_metrics"))
       .filter(FsOps.exists(conf, _))
       .map(p => spark.read.parquet(p.toString))
@@ -174,9 +167,7 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
     perPart.unpersist()
 
     val m = Manifest(snapshotId, configHash, rows, stage)
-    FsOps.sweepTmp(conf, manifestPath(stage)) // kill-stranded tmp manifests
-    val tmp = new Path(dir, s"_manifest.json.tmp-${java.util.UUID.randomUUID()}")
-    FsOps.writeAtomic(conf, tmp, manifestPath(stage), m.toJson)
+    FsOps.writeRecord(conf, manifestPath(stage), m.fields: _*)
     // GC every snapshot dir the manifest no longer references — superseded
     // commits AND stale-config leftovers (previously stranded forever; the
     // same single-writer-per-checkpoint-root assumption the st4_cc sweep

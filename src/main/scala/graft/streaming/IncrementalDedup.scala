@@ -1,12 +1,13 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Pipeline
+import graft.checkpoint.FsOps
 import graft.model.GraftConfig
 
 /** Incremental near-dup detection over a stream of pages (Structured
@@ -49,6 +50,13 @@ import graft.model.GraftConfig
   * periodically compacted (dup edges merged, member history reduced to
   * latest-per-url, dead nodes GC'd), so a years-long stream holds state
   * proportional to the LIVE corpus, not to its history.
+  *
+  * The state root may be any Hadoop filesystem URI with atomic rename
+  * (a plain path means the default filesystem; `file://`, `hdfs://` and
+  * `abfs://` roots work alike): every table swap, the version stamp and
+  * the remap journal commit through [[graft.checkpoint.FsOps]]. Object
+  * stores without atomic rename (plain S3) are NOT a safe state root —
+  * see the FsOps scaladoc.
   */
 object IncrementalDedup {
 
@@ -81,27 +89,16 @@ object IncrementalDedup {
     * reinterpreted by old code). */
   final val StateVersion = 3
 
-  private def exists(p: String): Boolean = Files.exists(Paths.get(p))
+  private def hconf(spark: SparkSession): Configuration = spark.sparkContext.hadoopConfiguration
 
-  private val VersionField = """"version"\s*:\s*(\d+)""".r
+  /** The `_state_version.json` fields (empty when the file is absent). */
+  private def readStamp(conf: Configuration, dirs: StateDirs): Map[String, String] =
+    FsOps.readRecord(conf, new Path(dirs.versionFile)).getOrElse(Map.empty)
 
-  private def readVersion(dirs: StateDirs): Option[Int] =
-    if (!exists(dirs.versionFile)) None
-    else VersionField.findFirstMatchIn(
-      new String(Files.readAllBytes(Paths.get(dirs.versionFile)),
-        java.nio.charset.StandardCharsets.UTF_8)).map(_.group(1).toInt)
-
-  private def writeVersion(dirs: StateDirs, bandChunks: Int, sigConfig: String): Unit = {
-    Files.createDirectories(Paths.get(dirs.root))
-    val tmp = Paths.get(dirs.root, s".ver-tmp-${java.util.UUID.randomUUID()}")
-    Files.write(tmp,
-      (s"""{"version": $StateVersion, "simhash_tier": ${if (bandChunks > 0) 1 else 0}, """ +
-        s""""band_chunks": $bandChunks, "sig_config": "$sigConfig"}""").getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(dirs.versionFile),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeStamp(conf: Configuration, dirs: StateDirs, bandChunks: Int, cfg: GraftConfig): Unit =
+    FsOps.writeRecord(conf, new Path(dirs.versionFile), "version" -> StateVersion,
+      "simhash_tier" -> (if (bandChunks > 0) 1 else 0), "band_chunks" -> bandChunks,
+      "sig_config" -> sigConfigOf(cfg))
 
   private def tierEnabled(cfg: GraftConfig): Boolean =
     cfg.simhashTier && cfg.maxHamming >= 0
@@ -126,28 +123,14 @@ object IncrementalDedup {
   private[streaming] def sigConfigOf(cfg: GraftConfig): String =
     s"k${cfg.shingleK}|p${cfg.numPerm}|b${cfg.bands}|s${cfg.seed}"
 
-  private val TierField = """"simhash_tier"\s*:\s*(\d)""".r
-  private val BandChunksField = """"band_chunks"\s*:\s*(-?\d+)""".r
-  private val SigConfigField = """"sig_config"\s*:\s*"([^"]*)"""".r
-
-  private def readVersionFile(dirs: StateDirs): Option[String] =
-    if (!exists(dirs.versionFile)) None
-    else Some(new String(Files.readAllBytes(Paths.get(dirs.versionFile)),
-      java.nio.charset.StandardCharsets.UTF_8))
-
   /** Which chunk-key families the durable band index holds, as recorded in
-    * the version file. Legacy files (pre-field) recorded only the boolean
+    * the version stamp. Legacy stamps (pre-field) recorded only the boolean
     * tier: true maps to -1 ("chunk keys of an UNKNOWN maxHamming" — never
     * equal to any want, forcing one rebuild that stamps the real count),
-    * false to 0. Absent file (pre-knob state) means MinHash-only. */
-  private def readBandChunks(dirs: StateDirs): Option[Int] =
-    readVersionFile(dirs).flatMap { txt =>
-      BandChunksField.findFirstMatchIn(txt).map(_.group(1).toInt)
-        .orElse(TierField.findFirstMatchIn(txt).map(m => if (m.group(1) == "1") -1 else 0))
-    }
-
-  private def readSigConfig(dirs: StateDirs): Option[String] =
-    readVersionFile(dirs).flatMap(SigConfigField.findFirstMatchIn(_).map(_.group(1)))
+    * false to 0. Absent stamp (pre-knob state) means MinHash-only. */
+  private[graft] def bandChunksOf(stamp: Map[String, String]): Option[Int] =
+    stamp.get("band_chunks").map(_.toInt)
+      .orElse(stamp.get("simhash_tier").map(t => if (t == "1") -1 else 0))
 
   /** The durable band index holds the key families of whichever tiers were
     * enabled when its rows were appended, so a `simhashTier` toggle — or a
@@ -159,22 +142,19 @@ object IncrementalDedup {
     * projection of the signature state (band_hashes and simhash are both
     * retained per node) — no text is recomputed — via the same crash-safe
     * swap as every state rewrite. */
-  private def ensureBandIndex(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs): Unit = {
+  private def ensureBandIndex(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs,
+      stamp: Map[String, String]): Unit = {
     val want = wantBandChunks(cfg)
-    val have = readBandChunks(dirs).getOrElse(0)
-    if (have != want) {
-      if (exists(dirs.signatures)) {
-        val tmp = s"${dirs.bandIndex}.tmp-${java.util.UUID.randomUUID()}"
-        Pipeline.bandKeys(spark.read.parquet(dirs.signatures), cfg).write.parquet(tmp)
-        swapDir(tmp, dirs.bandIndex)
-      }
-      writeVersion(dirs, want, sigConfigOf(cfg))
-    } else if (readBandChunks(dirs).isEmpty || readSigConfig(dirs).isEmpty)
-      writeVersion(dirs, want, sigConfigOf(cfg)) // stamp missing fields
+    if (bandChunksOf(stamp).getOrElse(0) != want) {
+      readIfPresent(spark, dirs.signatures)
+        .foreach(sigs => replaceTable(Pipeline.bandKeys(sigs, cfg), dirs.bandIndex))
+      writeStamp(hconf(spark), dirs, want, cfg)
+    } else if (bandChunksOf(stamp).isEmpty || !stamp.contains("sig_config"))
+      writeStamp(hconf(spark), dirs, want, cfg) // stamp missing fields
   }
 
-  /** Version gate + in-place migration, run once per batch (cheap: a file
-    * read once current). v1 members gain warc_ts = epoch, batch_id = -1 —
+  /** Version gate + in-place migration, run once per batch (cheap: one
+    * stamp read once current). v1 members gain warc_ts = epoch, batch_id = -1 —
     * strictly older than any live batch, so any future re-crawl of a v1 url
     * supersedes its binding; v<=2 clusters are rebuilt from ground truth
     * (members + edges) into the v3 resolved-binding shape. A version from
@@ -182,15 +162,16 @@ object IncrementalDedup {
   private[streaming] def ensureStateVersion(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs): Unit = {
     // Heal interrupted swaps first: every swapped table must be present (or
     // restored from its aside copy) before any state is read this batch.
-    // Every dir that swapDir ever targets (cluster writes, migration,
+    // Every dir that replaceTable ever targets (cluster writes, migration,
     // compaction) is covered.
+    val conf = hconf(spark)
     Seq(dirs.clusters, dirs.members, dirs.signatures, dirs.bandIndex, dirs.edges,
       dirs.metrics, dirs.texts)
-      .foreach(recoverSwap)
+      .foreach(t => FsOps.recoverSwap(conf, new Path(t)))
     // An interrupted remap leaves tables keyed inconsistently: processing
     // batches against that state would bind new content to stale ids.
     // Refuse until the remap is re-run to completion.
-    if (Files.exists(Paths.get(dirs.root, "_remap_journal.json")))
+    if (FsOps.exists(conf, remapJournal(dirs)))
       throw new IllegalStateException(
         s"incremental state at ${dirs.root} has an in-progress node-id remap " +
           "(_remap_journal.json) - re-run remapNodeIds with the same mapping to completion first")
@@ -201,7 +182,8 @@ object IncrementalDedup {
     // near-duplicate goes undetected with no error. A stamp from an older
     // library version is absent: trust-on-first-use (stamped below), same
     // as the pre-knob tier field.
-    readSigConfig(dirs).foreach { stored =>
+    val stamp = readStamp(conf, dirs)
+    stamp.get("sig_config").foreach { stored =>
       val cur = sigConfigOf(cfg)
       if (stored != cur)
         throw new IllegalStateException(
@@ -211,42 +193,56 @@ object IncrementalDedup {
             "Revert the config, point at a fresh state root, or rebuild state from " +
             "the original pages")
     }
-    readVersion(dirs) match {
+    stamp.get("version").map(_.toInt) match {
       case Some(StateVersion) => // current; key-family toggle still possible
-        ensureBandIndex(spark, cfg, dirs)
+        ensureBandIndex(spark, cfg, dirs, stamp)
       case Some(v) if v > StateVersion =>
         throw new IllegalStateException(
           s"incremental state at ${dirs.root} has schema version $v, newer than " +
           s"supported $StateVersion — refusing to reinterpret (upgrade the library)")
       case _ => // absent or older: migrate what exists, then stamp
-        if (exists(dirs.members)) {
-          val m = spark.read.parquet(dirs.members)
-          if (!m.columns.contains("batch_id")) {
-            // Migrate via temp-dir + crash-safe swap: an in-place overwrite
-            // would delete the only copy of member state before rewriting
-            // it, and a crash mid-write (before the version stamp) would be
-            // unrecoverable. The swap keeps old-or-new present throughout;
-            // re-running the migration after any crash is idempotent (the
-            // batch_id column guard above).
-            val tmp = s"${dirs.members}.tmp-${java.util.UUID.randomUUID()}"
-            m.withColumn("warc_ts", lit(new java.sql.Timestamp(0L)))
-              .withColumn("batch_id", lit(-1L))
-              .select("url", "node_id", "n_bytes", "warc_ts", "batch_id")
-              .write.parquet(tmp)
-            swapDir(tmp, dirs.members)
-          }
-          rebuildClusters(spark, cfg, dirs) // v<=2 clusters -> v3 shape
-          // pre-knob states hold a MinHash-only band index: stamp that,
-          // then let the toggle path rebuild if this config wants more
-          writeVersion(dirs, 0, sigConfigOf(cfg))
-          ensureBandIndex(spark, cfg, dirs)
-        } else writeVersion(dirs, wantBandChunks(cfg), sigConfigOf(cfg)) // fresh state
+        readIfPresent(spark, dirs.members) match {
+          case Some(m) =>
+            if (!m.columns.contains("batch_id")) {
+              // Migrate via temp-dir + crash-safe swap: an in-place overwrite
+              // would delete the only copy of member state before rewriting
+              // it, and a crash mid-write (before the version stamp) would be
+              // unrecoverable. The swap keeps old-or-new present throughout;
+              // re-running the migration after any crash is idempotent (the
+              // batch_id column guard above).
+              replaceTable(m.withColumn("warc_ts", lit(new java.sql.Timestamp(0L)))
+                .withColumn("batch_id", lit(-1L))
+                .select("url", "node_id", "n_bytes", "warc_ts", "batch_id"), dirs.members)
+            }
+            rebuildClusters(spark, cfg, dirs) // v<=2 clusters -> v3 shape
+            // pre-knob states hold a MinHash-only band index (what an empty
+            // stamp says): the toggle path rebuilds it if this config wants
+            // more, then stamps
+            ensureBandIndex(spark, cfg, dirs, Map.empty)
+          case None => writeStamp(conf, dirs, wantBandChunks(cfg), cfg) // fresh state
+        }
     }
   }
 
+  private def remapJournal(dirs: StateDirs): Path = new Path(dirs.root, "_remap_journal.json")
+
+  /** The state table at `path`, if it has ever been written. */
+  private def readIfPresent(spark: SparkSession, path: String): Option[DataFrame] =
+    if (FsOps.exists(hconf(spark), new Path(path))) Some(spark.read.parquet(path)) else None
+
   private def readOrEmpty(spark: SparkSession, path: String, schemaOf: DataFrame): DataFrame =
-    if (exists(path)) spark.read.parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf.schema)
+    readIfPresent(spark, path).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf.schema))
+
+  /** Replace the table at `path` with `df` through the crash-safe
+    * FsOps.swapDir (old-or-new present at every instant, healed by
+    * FsOps.recoverSwap on the next batch). `df` may read the table it
+    * replaces — e.g. the clusters output derives from the previous
+    * clusters table: the write completes into a fresh dir before the
+    * swap, never an in-place overwrite of its own input. (Iceberg
+    * snapshot commit is the real-cluster equivalent.) */
+  private def replaceTable(df: DataFrame, path: String): Unit =
+    FsOps.swapDir(hconf(df.sparkSession), new Path(path))(tmp => df.write.parquet(tmp.toString))
 
   /** Process one micro-batch of pages against the state under `dirs`.
     * Exposed for testing; `start` wires it into foreachBatch.
@@ -300,8 +296,7 @@ object IncrementalDedup {
         col("m.n_bytes").as("n_bytes"), col("m.warc_ts").as("warc_ts"))
       .withColumn("batch_id", lit(batchId))
     val prevC: DataFrame =
-      if (exists(dirs.clusters)) spark.read.parquet(dirs.clusters).localCheckpoint(false)
-      else null
+      readIfPresent(spark, dirs.clusters).map(_.localCheckpoint(false)).orNull
     val currentBindings =
       if (prevC != null) prevC.select("url", "node_id")
       else readOrEmpty(spark, dirs.members, memberRows).select("url", "node_id").limit(0)
@@ -311,11 +306,10 @@ object IncrementalDedup {
     if (newMemberRows.isEmpty) return
 
     // ---- new contents = not yet in the signature state
-    val contents =
-      if (!exists(dirs.signatures)) newContents.localCheckpoint(false)
-      else newContents.join(
-        spark.read.parquet(dirs.signatures).select("node_id"),
-        Seq("node_id"), "left_anti").localCheckpoint(false)
+    val storedSigs = readIfPresent(spark, dirs.signatures)
+    val contents = storedSigs
+      .fold(newContents)(st => newContents.join(st.select("node_id"), Seq("node_id"), "left_anti"))
+      .localCheckpoint(false)
 
     val sigs = Pipeline.signatures(contents, cfg)
       .localCheckpoint(false)
@@ -397,8 +391,7 @@ object IncrementalDedup {
     // signature traffic is O(est candidates), not O(live corpus).
     val estIds = estCrossPairs.select(col("id_a").as("node_id"))
       .union(estCrossPairs.select(col("id_b").as("node_id"))).distinct()
-    val allSigs = (if (exists(dirs.signatures))
-      spark.read.parquet(dirs.signatures).unionByName(sigs) else sigs)
+    val allSigs = storedSigs.fold(sigs)(_.unionByName(sigs))
       .select("node_id", "minhash", "simhash")
       .join(estIds, Seq("node_id"), "left_semi")
     val estMin = cfg.minJaccard - 2.0 * math.sqrt(cfg.minJaccard * (1 - cfg.minJaccard) / cfg.numPerm)
@@ -540,7 +533,7 @@ object IncrementalDedup {
 
     val untouched = prevC.join(affClusters, Seq("cluster_id"), "left_anti")
       .select("url", "node_id", "cluster_id", "n_bytes", "warc_ts", "batch_id")
-    writeClustersAtomic(untouched.unionByName(newAff), dirs)
+    replaceTable(untouched.unionByName(newAff), dirs.clusters)
     appendParquet(metricsRow, dirs.metrics) // after the swap, see above
     compactStateIfNeeded(spark, cfg, dirs)
   }
@@ -618,26 +611,26 @@ object IncrementalDedup {
     * batch, v<3 migration, and cluster-state recovery; per-batch processing
     * uses the bounded affected-component path instead. */
   private[streaming] def rebuildClusters(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs): Unit = {
-    if (!exists(dirs.members)) return
-    val resolved = spark.read.parquet(dirs.members)
+    val members = readIfPresent(spark, dirs.members)
+    if (members.isEmpty) return
+    val resolved = members.get
       .groupBy("url")
       .agg(max(struct(col("batch_id"), col("warc_ts"), col("node_id"), col("n_bytes"))).as("m"))
       .select(col("url"), col("m.node_id").as("node_id"), col("m.n_bytes").as("n_bytes"),
         col("m.warc_ts").as("warc_ts"), col("m.batch_id").as("batch_id"))
       .localCheckpoint(false)
     val liveA = resolved.select(col("node_id").as("id_a")).distinct()
-    val liveEdges =
-      (if (exists(dirs.edges)) spark.read.parquet(dirs.edges).distinct()
-       else spark.emptyDataFrame.select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0))
-        .join(liveA, Seq("id_a"), "left_semi")
-        .join(liveA.select(col("id_a").as("id_b")), Seq("id_b"), "left_semi")
+    val liveEdges = readIfPresent(spark, dirs.edges).map(_.distinct())
+      .getOrElse(spark.emptyDataFrame.select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0))
+      .join(liveA, Seq("id_a"), "left_semi")
+      .join(liveA.select(col("id_a").as("id_b")), Seq("id_b"), "left_semi")
     val cc = graft.cluster.ConnectedComponents.run(spark, liveEdges, cfg.maxCcIterations,
       localThreshold = cfg.ccLocalThreshold)
     val clusters = resolved
       .join(cc, resolved("node_id") === cc("id"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("node_id")))
       .select("url", "node_id", "cluster_id", "n_bytes", "warc_ts", "batch_id")
-    writeClustersAtomic(clusters, dirs)
+    replaceTable(clusters, dirs.clusters)
   }
 
   /** Identity-key remap of stored state — the graft analog of the
@@ -654,25 +647,24 @@ object IncrementalDedup {
     * not 1-to-1, or whose new ids collide with unmapped stored ids, would
     * silently merge or split content identities and is rejected before any
     * write. Each table rewrite is crash-safe (temp dir + rename-aside
-    * swap, healed by `recoverSwap` on the next batch).
+    * swap, healed by `FsOps.recoverSwap` on the next batch).
     *
     * Cluster labels are component-min node ids, so they are recomputed per
     * (unchanged) membership group after the remap — a pure groupBy-min,
     * no connected-components rerun. */
   def remapNodeIds(spark: SparkSession, dirs: StateDirs, mapping: DataFrame,
       crashAfterTables: Int = Int.MaxValue): Unit = {
-    Seq(dirs.clusters, dirs.members, dirs.signatures, dirs.bandIndex, dirs.edges,
+    val conf = hconf(spark)
+    val tables = Seq(dirs.clusters, dirs.members, dirs.signatures, dirs.bandIndex, dirs.edges,
       dirs.texts)
-      .foreach(recoverSwap)
+    tables.foreach(t => FsOps.recoverSwap(conf, new Path(t)))
     // Version gate BEFORE any journal write: the clusters rewrite below
     // selects v3 columns (warc_ts, batch_id), so a remap over pre-v3 state
     // would fail AFTER journaling and rewriting five tables — and the
     // leftover journal blocks ensureStateVersion (hence the migration that
     // would fix it) from ever running: a wedged state. Refuse up front.
-    val stateExists = Seq(dirs.clusters, dirs.members, dirs.signatures,
-      dirs.bandIndex, dirs.edges, dirs.texts).exists(exists)
-    if (stateExists) {
-      val v = readVersion(dirs)
+    if (tables.exists(t => FsOps.exists(conf, new Path(t)))) {
+      val v = readStamp(conf, dirs).get("version").map(_.toInt)
       require(v.contains(StateVersion),
         s"incremental state at ${dirs.root} is schema v${v.getOrElse(1)}, not v$StateVersion " +
           "- run any processBatch (ensureStateVersion) to migrate BEFORE remapping node ids")
@@ -694,25 +686,15 @@ object IncrementalDedup {
     // first, so it is refused, never silently mixed.
     val mapHashRow = m.agg(bit_xor(xxhash64(col("old_id"), col("new_id"))), count(lit(1))).head()
     val mapHash = f"${mapHashRow.getLong(0)}%016x-${mapHashRow.getLong(1)}"
-    val journalPath = Paths.get(dirs.root, "_remap_journal.json")
-    val JField = """"(\w+)"\s*:\s*"([^"]*)"""".r
-    val done: Set[String] =
-      if (!Files.exists(journalPath)) Set.empty
-      else {
-        val kv = JField.findAllMatchIn(new String(Files.readAllBytes(journalPath),
-          java.nio.charset.StandardCharsets.UTF_8)).map(x => x.group(1) -> x.group(2)).toMap
-        require(kv.get("mapping_hash").contains(mapHash),
-          s"an interrupted remap under a different mapping (${kv.getOrElse("mapping_hash", "?")}) " +
-            "left partial state - re-run THAT remap to completion before starting a new one")
-        kv.get("done").map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-      }
-    def writeJournal(doneNow: Set[String]): Unit = {
-      val tmp = Paths.get(dirs.root, s".remap-tmp-${java.util.UUID.randomUUID()}")
-      Files.write(tmp, s"""{"mapping_hash": "$mapHash", "done": "${doneNow.mkString(",")}"}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Files.move(tmp, journalPath, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val journal = remapJournal(dirs)
+    val done: Set[String] = FsOps.readRecord(conf, journal).fold(Set.empty[String]) { kv =>
+      require(kv.get("mapping_hash").contains(mapHash),
+        s"an interrupted remap under a different mapping (${kv.getOrElse("mapping_hash", "?")}) " +
+          "left partial state - re-run THAT remap to completion before starting a new one")
+      kv.get("done").map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
     }
+    def writeJournal(doneNow: Set[String]): Unit =
+      FsOps.writeRecord(conf, journal, "mapping_hash" -> mapHash, "done" -> doneNow.mkString(","))
 
     // a new id colliding with a stored id the mapping does NOT touch would
     // merge two distinct contents under one key (checked over the tables
@@ -724,14 +706,12 @@ object IncrementalDedup {
     val nodeIdTables =
       Seq("signatures" -> dirs.signatures, "members" -> dirs.members, "clusters" -> dirs.clusters,
         "band_index" -> dirs.bandIndex, "texts" -> dirs.texts)
-        .filter { case (name, p) => !done.contains(name) && exists(p) }
-        .map { case (_, p) => spark.read.parquet(p).select(col("node_id").as("id")) }
+        .filter { case (name, _) => !done.contains(name) }
+        .flatMap { case (_, p) => readIfPresent(spark, p).map(_.select(col("node_id").as("id"))) }
     val edgeIdTables =
-      if (done.contains("edges") || !exists(dirs.edges)) Nil
-      else {
-        val e = spark.read.parquet(dirs.edges)
-        Seq(e.select(col("id_a").as("id")), e.select(col("id_b").as("id")))
-      }
+      if (done.contains("edges")) Nil
+      else readIfPresent(spark, dirs.edges).toSeq
+        .flatMap(e => Seq(e.select(col("id_a").as("id")), e.select(col("id_b").as("id"))))
     val storedIds = (nodeIdTables ++ edgeIdTables)
       .reduceOption(_ union _)
       .map(_.distinct())
@@ -756,11 +736,7 @@ object IncrementalDedup {
         if (rewrites >= crashAfterTables) // test hook: simulate dying midway
           throw new RuntimeException(s"injected crash before rewriting $name")
         rewrites += 1
-        if (exists(path)) {
-          val tmp = s"$path.tmp-${java.util.UUID.randomUUID()}"
-          f(spark.read.parquet(path)).write.parquet(tmp)
-          swapDir(tmp, path)
-        }
+        readIfPresent(spark, path).foreach(t => replaceTable(f(t), path))
         doneNow += name
         writeJournal(doneNow)
       }
@@ -782,7 +758,10 @@ object IncrementalDedup {
         .select(col("url"), col("node_id"), col("new_label").as("cluster_id"),
           col("n_bytes"), col("warc_ts"), col("batch_id"))
     }
-    Files.deleteIfExists(journalPath) // all tables consistent again
+    // all tables consistent again; a journal left behind would keep every
+    // batch refused, so a failed clear is loud
+    if (!FsOps.deleteRecursive(conf, journal))
+      throw new java.io.IOException(s"could not clear the remap journal $journal")
   }
 
   /** Rewrite accumulated state compacted when any dir's file count exceeds
@@ -803,26 +782,16 @@ object IncrementalDedup {
   private[streaming] def compactStateIfNeeded(spark: SparkSession, cfg: GraftConfig,
       dirs: StateDirs): Boolean = {
     val threshold = cfg.incCompactFileThreshold
-    if (threshold <= 0 || !exists(dirs.clusters)) return false
-    def fileCount(p: String): Int =
-      if (!exists(p)) 0
-      else {
-        import scala.jdk.CollectionConverters._
-        val s = Files.list(Paths.get(p))
-        try s.iterator().asScala.count(Files.isRegularFile(_))
-        finally s.close()
-      }
+    val conf = hconf(spark)
+    if (threshold <= 0 || !FsOps.exists(conf, new Path(dirs.clusters))) return false
     val dirsToWatch = Seq(dirs.members, dirs.edges, dirs.bandIndex, dirs.signatures,
       dirs.metrics, dirs.texts)
-    if (!dirsToWatch.exists(fileCount(_) > threshold)) return false
+    if (!dirsToWatch.exists(p => FsOps.fileCount(conf, new Path(p)) > threshold)) return false
 
     val live = spark.read.parquet(dirs.clusters)
       .select("node_id").distinct().localCheckpoint(true)
-    def rewrite(path: String)(f: DataFrame => DataFrame): Unit = if (exists(path)) {
-      val tmp = s"$path.tmp-${java.util.UUID.randomUUID()}"
-      f(spark.read.parquet(path)).write.parquet(tmp) // reads source, writes tmp
-      swapDir(tmp, path) // crash-safe: old-or-new present at every instant
-    }
+    def rewrite(path: String)(f: DataFrame => DataFrame): Unit =
+      readIfPresent(spark, path).foreach(t => replaceTable(f(t), path))
     rewrite(dirs.members) { m =>
       m.groupBy("url")
         .agg(max(struct(col("batch_id"), col("warc_ts"), col("node_id"), col("n_bytes"))).as("m"))
@@ -846,72 +815,6 @@ object IncrementalDedup {
     // rewrites don't touch
     rewrite(dirs.metrics)(_.coalesce(1))
     true
-  }
-
-  /** The clusters output derives from (and replaces) the previous clusters
-    * table, so the write goes to a fresh temp dir and swaps in after it
-    * completes — never an in-place overwrite of its own input. (Iceberg
-    * snapshot commit is the real-cluster equivalent.) */
-  private def writeClustersAtomic(df: DataFrame, dirs: StateDirs): Unit = {
-    val tmp = s"${dirs.clusters}.tmp-${java.util.UUID.randomUUID()}"
-    df.write.mode("overwrite").parquet(tmp)
-    swapDir(tmp, dirs.clusters)
-  }
-
-  // NIO streams are CLOSED (try/finally) everywhere below: these helpers
-  // run many times per micro-batch on a driver that lives for the stream's
-  // lifetime, and an unclosed DirectoryStream holds a file descriptor until
-  // GC — a mostly-idle stream (low GC pressure) would creep toward the fd
-  // ulimit. (sorted() drains walk() before iteration, so deleting entries
-  // during the loop is safe — the traversal is already buffered.)
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-      finally s.close()
-    }
-
-  /** Crash-safe directory replacement: the current table is renamed ASIDE
-    * (one rename), the new one moved in (one rename), and only then is the
-    * aside copy deleted — at every instant either the old or the new table
-    * is recoverable, unlike delete-tree-then-move which leaves a window
-    * with no table at all. `recoverSwap` heals the one bad window (crash
-    * between the two renames) by restoring the aside copy. */
-  private[streaming] def swapDir(tmp: String, target: String): Unit = {
-    val t = Paths.get(target)
-    val aside = Paths.get(target + ".old")
-    deleteTree(aside) // stale aside from a crash after a completed swap
-    if (Files.exists(t)) Files.move(t, aside)
-    try Files.move(Paths.get(tmp), t)
-    catch { case e: Throwable => // restore the old table before propagating
-      if (!Files.exists(t) && Files.exists(aside)) Files.move(aside, t)
-      throw e
-    }
-    deleteTree(aside)
-  }
-
-  /** Heal an interrupted `swapDir`: if the target vanished mid-swap the
-    * aside copy is moved back; a surviving aside next to an intact target
-    * (crash after the second rename) is dropped. Also clears abandoned
-    * `.tmp-*` write dirs so crashes don't leak space. Run once per batch. */
-  private[streaming] def recoverSwap(target: String): Unit = {
-    val t = Paths.get(target)
-    val aside = Paths.get(target + ".old")
-    if (!Files.exists(t) && Files.exists(aside)) Files.move(aside, t)
-    else if (Files.exists(aside)) deleteTree(aside)
-    val parent = t.getParent
-    if (parent != null && Files.exists(parent)) {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(parent)
-      val stale =
-        try s.iterator().asScala
-          .filter(_.getFileName.toString.startsWith(s"${t.getFileName}.tmp-"))
-          .toList
-        finally s.close()
-      stale.foreach(deleteTree)
-    }
   }
 
   private def appendParquet(df: DataFrame, path: String): Unit =

@@ -17,9 +17,26 @@ class NoFcLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("graftnofc:///")
 }
 
+/** Local-disk FileSystem whose deletes of `*.old` paths fail, the way an
+  * aside copy can survive a swap's cleanup (permissions, a concurrent
+  * holder). No AbstractFileSystem binding unless [[StickyAsideFc]] is
+  * configured, so both rename paths of FsOps can be exercised. */
+class StickyAsideLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "graftsticky"
+  override def getUri: java.net.URI = java.net.URI.create("graftsticky:///")
+  override def delete(p: Path, recursive: Boolean): Boolean =
+    !p.getName.endsWith(".old") && super.delete(p, recursive)
+}
+
+/** FileContext binding for [[StickyAsideLocalFs]]. */
+class StickyAsideFc(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(uri, new StickyAsideLocalFs, conf,
+      "graftsticky", false)
+
 /** Unit gates for the Hadoop-FS primitives under every durable store
-  * (ParquetSnapshotIO manifests/GC, CC's per-iteration label store). The
-  * stores' semantics are tested in ResumeSpec/ConnectedComponentsSpec;
+  * (ParquetSnapshotIO manifests/GC, CC's per-iteration label store,
+  * incremental state swaps and stamps). The stores' semantics are tested
+  * in ResumeSpec/ConnectedComponentsSpec/IncrementalDedupSpec;
   * these pin the primitives' contracts — atomic-overwrite rename, absent-
   * path behavior, cross-scheme equivalence — so a future FS-layer change
   * can't silently weaken a commit path. */
@@ -142,5 +159,89 @@ class FsOpsSpec extends SparkSpec {
     assert(FsOps.readString(conf, uri) == "via-plain")
     FsOps.writeAtomic(conf, new Path("file://" + d, "t2"), uri, "via-uri")
     assert(FsOps.readString(conf, plain) == "via-uri")
+  }
+
+  private def put(c: org.apache.hadoop.conf.Configuration, p: Path, content: String): Unit =
+    FsOps.writeAtomic(c, p.suffix(".put"), p, content)
+
+  test("swapDir replaces a table and leaves no aside copy or tmp dir behind") {
+    val d = "file://" + tmpDir()
+    val t = new Path(d, "clusters")
+    put(conf, new Path(t, "part-0"), "v1")
+    FsOps.swapDir(conf, t)(tmp => put(conf, new Path(tmp, "part-0"), "v2"))
+    assert(FsOps.readString(conf, new Path(t, "part-0")) == "v2")
+    assert(FsOps.listDirs(conf, new Path(d)).map(_.getName) == Seq("clusters"))
+  }
+
+  test("recoverSwap restores an interrupted swap (target missing, .old present)") {
+    val d = "file://" + tmpDir()
+    val t = new Path(d, "clusters")
+    put(conf, new Path(t.suffix(".old"), "part-0"), "v1") // renamed aside, new not moved in
+    FsOps.recoverSwap(conf, t)
+    assert(FsOps.readString(conf, new Path(t, "part-0")) == "v1")
+    assert(!FsOps.exists(conf, t.suffix(".old")))
+  }
+
+  test("recoverSwap drops a stale .old next to an intact target") {
+    val d = "file://" + tmpDir()
+    val t = new Path(d, "clusters")
+    put(conf, new Path(t, "part-0"), "new")
+    put(conf, new Path(t.suffix(".old"), "part-0"), "stale") // crash after the second rename
+    FsOps.recoverSwap(conf, t)
+    assert(FsOps.readString(conf, new Path(t, "part-0")) == "new")
+    assert(!FsOps.exists(conf, t.suffix(".old")))
+  }
+
+  test("recoverSwap sweeps abandoned .tmp-* directories, not other siblings") {
+    val d = "file://" + tmpDir()
+    val t = new Path(d, "clusters")
+    put(conf, new Path(t, "part-0"), "live")
+    put(conf, new Path(new Path(d, "clusters.tmp-dead"), "part-0"), "partial write")
+    put(conf, new Path(new Path(d, "members.tmp-other"), "part-0"), "another table's")
+    FsOps.recoverSwap(conf, t)
+    assert(!FsOps.exists(conf, new Path(d, "clusters.tmp-dead")))
+    assert(FsOps.exists(conf, new Path(d, "members.tmp-other")))
+    assert(FsOps.readString(conf, new Path(t, "part-0")) == "live")
+  }
+
+  test("a swap meeting a surviving stale .old refuses instead of nesting the table in it") {
+    // FileSystem.rename onto an existing directory moves the source INTO
+    // it; the swap's renames must fail instead, on both rename paths.
+    for (withFc <- Seq(false, true)) {
+      val c = new org.apache.hadoop.conf.Configuration(conf)
+      c.set("fs.graftsticky.impl", classOf[StickyAsideLocalFs].getName)
+      c.setBoolean("fs.graftsticky.impl.disable.cache", true)
+      if (withFc) c.set("fs.AbstractFileSystem.graftsticky.impl", classOf[StickyAsideFc].getName)
+      val d = "graftsticky://" + tmpDir()
+      val t = new Path(d, "clusters")
+      put(c, new Path(t, "part-0"), "v1")
+      put(c, new Path(t.suffix(".old"), "part-0"), "stale")
+      intercept[java.io.IOException] {
+        FsOps.swapDir(c, t)(tmp => put(c, new Path(tmp, "part-0"), "v2"))
+      }
+      assert(FsOps.readString(c, new Path(t, "part-0")) == "v1", s"withFc=$withFc")
+      assert(!FsOps.exists(c, new Path(t.suffix(".old"), "clusters")),
+        s"withFc=$withFc: the table was nested inside the stale aside copy")
+    }
+  }
+
+  test("commit records round-trip; legacy stamps and negative integers parse") {
+    val d = tmpDir()
+    val p = new Path("file://" + d, "_state_version.json")
+    put(conf, new Path(d, "_state_version.json.tmp-dead"), "kill-stranded")
+    FsOps.writeRecord(conf, p, "version" -> 3, "band_chunks" -> -1, "row_count" -> Long.MinValue,
+      "sig_config" -> "k5|p128|b32|s42", "note" -> "a \"quoted\" \\ value")
+    assert(FsOps.readString(conf, p).startsWith("""{"version": 3, "band_chunks": -1, """))
+    assert(FsOps.readRecord(conf, p).contains(Map("version" -> "3", "band_chunks" -> "-1",
+      "row_count" -> Long.MinValue.toString, "sig_config" -> "k5|p128|b32|s42",
+      "note" -> "a \"quoted\" \\ value")))
+    assert(!FsOps.exists(conf, new Path(d, "_state_version.json.tmp-dead")))
+    // a stamp written before band_chunks existed: only the boolean tier
+    put(conf, p, """{"version": 3, "simhash_tier": 1}""")
+    val legacy = FsOps.readRecord(conf, p).get
+    assert(legacy == Map("version" -> "3", "simhash_tier" -> "1"))
+    assert(graft.streaming.IncrementalDedup.bandChunksOf(legacy).contains(-1))
+    assert(FsOps.readRecord(conf, new Path(d, "absent.json")).isEmpty)
+    intercept[IllegalArgumentException] { FsOps.parseRecord("""{"a": {"b": 1}}""") }
   }
 }

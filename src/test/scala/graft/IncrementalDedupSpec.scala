@@ -651,8 +651,12 @@ class IncrementalDedupSpec extends SparkSpec {
     // replay recomputes anything not yet durable), and the metrics audit
     // table must hold exactly one row for the replayed batch (it is
     // appended after the clusters swap).
-    for (k <- 0 to 3) {
-      val root = Files.createTempDirectory(s"graft-inc-crash-$k").toString
+    // Each crash point runs on a plain-path root and on a file:// URI root:
+    // state commits go through the Hadoop filesystem, so both spellings
+    // name the same local directory (and nothing lands in a stray
+    // relative `file:` directory under the working directory).
+    for (k <- 0 to 3; scheme <- Seq("", "file://")) {
+      val root = scheme + Files.createTempDirectory(s"graft-inc-crash-$k").toString
       val dirs = StateDirs(root)
       IncrementalDedup.processBatch(b1, cfg, dirs, batchId = 1L)
       val e = intercept[RuntimeException] {
@@ -663,6 +667,8 @@ class IncrementalDedupSpec extends SparkSpec {
       assert(groups(dirs) == control, s"crash point $k: replay must match the no-crash result")
       assert(spark.read.parquet(dirs.metrics).where(col("batch_id") === 2L).count() == 1,
         s"crash point $k: exactly one metrics row for the replayed batch")
+      assert(!Files.exists(java.nio.file.Paths.get("file:")),
+        s"crash point $k, root $root: state leaked into a relative file: directory")
     }
   }
 

@@ -89,10 +89,10 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("unitOffset yields a disjoint corpus; offset 0 is byte-identical to the default") {
-    // IncrementalProbe builds its stream of fresh batches on this: an
-    // offset range must share NO urls with the base range (urls derive
-    // from the unit index), and the default must not shift existing
-    // fixtures (golden/truth corpora regenerate byte-identically)
+    // streams of fresh batches (perfbench `stream`: one unit range per
+    // batch) rest on this: an offset range must share NO urls with the
+    // base range (urls derive from the unit index), and the default must
+    // not shift existing fixtures (golden/truth corpora regenerate byte-identically)
     val base = PagesGen.pages(spark, spec).collect().map(r => r.getString(0) -> r.getString(3)).toMap
     val zero = PagesGen.pages(spark, spec.copy(unitOffset = 0L)).collect()
       .map(r => r.getString(0) -> r.getString(3)).toMap
