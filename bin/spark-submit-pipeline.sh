@@ -5,7 +5,7 @@
 #   bin/spark-submit-pipeline.sh run --input <pages.parquet> --output <dir> [...]
 #                                                 # production pipeline (graft.Main;
 #                                                 #  all graft.Main flags pass through)
-#   bin/spark-submit-pipeline.sh bench            # Bench JSON (scaling + queries)
+#   bin/spark-submit-pipeline.sh bench            # Bench JSON (query timings)
 #   bin/spark-submit-pipeline.sh verify SF OUT    # correctness dump
 #
 # On a real cluster swap --master local[*] for the cluster master and drop
@@ -30,9 +30,9 @@ case "$MODE" in
 esac
 
 exec /opt/spark/bin/spark-submit \
-  --master "local[${SPARK_GRAFT_CPUS:-32}]" \
+  --master "local[${SPARK_GRAFT_CPUS:-$(nproc)}]" \
   --driver-memory "${SPARK_DRIVER_MEM:-48g}" \
-  --conf spark.sql.shuffle.partitions="${SPARK_GRAFT_CPUS:-32}" \
+  --conf spark.sql.shuffle.partitions="${SPARK_GRAFT_CPUS:-$(nproc)}" \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.local.dir=/dev/shm/graft-spark-tmp \
   --conf spark.ui.enabled=false \

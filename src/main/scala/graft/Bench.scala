@@ -2,170 +2,45 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.fixtures.PagesGen
-
 /** Per-round benchmark main (driver contract): times every SparkEntry query
-  * at local[N] (N = SPARK_GRAFT_CPUS, default 32) and prints ONE JSON line.
-  *
-  * Also emits the north-rule scaling evidence: the full near-dup pipeline
-  * over an identical deterministic corpus at local[2], local[8] and
-  * local[32] (the sandbox stand-in for N- vs 4N-executor runs — no real
-  * cluster is available), reporting docs/sec at every level and one
-  * efficiency = (throughput@4N / throughput@N) / 4 per adjacent pair.
-  * 2→8 is the pair that transfers to a real cluster (cores quadruple
-  * with DRAM-bandwidth headroom, as 4N executors bring 4N× aggregate
-  * bandwidth); 8→32 quadruples cores into this single box's shared
-  * memory-bandwidth ceiling and is kept for cross-round continuity.
+  * at local[N] (N = SPARK_GRAFT_CPUS, default the host's core count) and
+  * prints ONE JSON line. Pipeline throughput and N→4N scaling are measured
+  * by perfbench (`docs_per_s`, `pipeline.scale_eff`), not here.
   *
   * Survivability contract (round-4 lesson: the driver's timeout killed the
   * run mid-section and recorded NOTHING despite every query having
-  * finished):
-  *  - a wall-clock budget (SPARK_GRAFT_BUDGET_SECS, default 1500) gates
-  *    every OPTIONAL repetition — once elapsed time crosses a section's
-  *    share of the budget, remaining reps are skipped (min-of-fewer reps
-  *    is still a valid estimator by construction);
-  *  - the FULL result JSON is re-emitted under the FINAL sentinel after
-  *    the query section and after EVERY completed scaling rep-round, each
-  *    emission superseding the last (last one wins) — so a kill at ANY
-  *    point strands at most the rep-round in flight, never the artifact;
-  *  - the mandatory skeleton (1 query rep, 1 pipeline rep per level,
-  *    1 sig rep per level) runs regardless of budget: without it there is
-  *    no scaling evidence at all.
+  * finished): a wall-clock budget (1500 s) gates every OPTIONAL repetition
+  * — once elapsed time crosses a rep round's share of the budget, remaining
+  * reps are skipped (min-of-fewer reps is still a valid estimator by
+  * construction); the first rep of every query runs regardless.
   */
 object Bench {
 
   private val t0Main = System.nanoTime()
   private def elapsedSecs: Double = (System.nanoTime() - t0Main) / 1e9
 
-  private def session(cpus: Int): SparkSession =
-    graft.util.LocalSession(cpus, s"graft-bench-$cpus")
-
-  /** Stage-cache policy for the timed pipeline runs: which stages are
-    * lazily checkpointed (SelectiveCacheIO). "*" = all (the default IO). */
-  private def benchIO: graft.checkpoint.TableIO = {
-    val cached = sys.env.getOrElse("SPARK_GRAFT_BENCH_CACHE", "*")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    // Serialized+compressed stage caches by default: measured -7% wall at
-    // local[32] (bandwidth-bound) and neutral at local[8] (BASELINE.md).
-    val level = sys.env.get("SPARK_GRAFT_CACHE_LEVEL")
-      .orElse(Some("MEMORY_AND_DISK_SER"))
-      .filter(_ != "DEFAULT")
-      .map(org.apache.spark.storage.StorageLevel.fromString)
-    new graft.checkpoint.SelectiveCacheIO(cached, level)
-  }
-
-  /** One timed full-pipeline run over nUnits synthetic pages in a fresh
-    * session. A warm-up run absorbs class-load and codegen cost. */
-  private def pipelineRunOnce(spark: SparkSession, nUnits: Long): (Long, Double) = {
-    // tokensScale=6 ≈ 4 KB extracted text per page (typical web page).
-    // After the bit-sliced SimHash kernel, smaller docs leave local[8]
-    // under-utilized relative to the fixed floor; 6 keeps the run
-    // compute-representative at both levels (A/Bs in BASELINE.md).
-    val tokensScale = sys.env.getOrElse("SPARK_GRAFT_TOKENS_SCALE", "6").toInt
-    val spec = PagesGen.Spec(nUnits = nUnits, tokensScale = tokensScale)
-    val io = benchIO
-    Pipeline.run(spark, PagesGen.pages(spark, spec.copy(nUnits = 60)), SparkEntry.cfg, io)
-      .report.count() // warm-up
-    val pages = PagesGen.pages(spark, spec)
-    val docs = pages.count()
-    val t0 = System.nanoTime()
-    Pipeline.run(spark, pages, SparkEntry.cfg, io).report.count()
-    (docs, (System.nanoTime() - t0) / 1e9)
-  }
-
-  /** The signature-stage corpus, generated ONCE to /dev/shm parquet and
-    * read per rep session (round-4 lesson: regenerating + materializing
-    * 2M docs inside EVERY rep's fresh session was ~30-70 s of pure setup
-    * per rep — 6x the timed work — and exactly where the driver's timeout
-    * landed). Path is keyed by (units, tokensScale), so an existing
-    * corpus (including one left by a killed earlier run) is reused. */
-  private def ensureSigCorpus(nUnits: Long, tokensScale: Int): String = {
-    val path = s"/dev/shm/graft-bench-sig-$nUnits-t$tokensScale"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS"))) {
-      val s = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-      // 64 files: enough read-split granularity for local[32] with
-      // maxPartitionBytes lowered at read time (sigRunOnce).
-      PagesGen.syntheticContents(s, nUnits, tokensScale = tokensScale)
-        .repartition(64).write.mode("overwrite").parquet(path)
-      s.stop()
-    }
-    path
-  }
-
-  private def deleteSigCorpus(path: String): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      val p = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(p)) {
-        // _SUCCESS dies FIRST: a kill landing mid-walk must never leave a
-        // partial corpus that still looks committed — ensureSigCorpus
-        // validates on _SUCCESS, and a truncated-but-"valid" corpus
-        // silently changes the sig workload (observed: a killed cleanup
-        // left 1.25M of 2M docs behind a surviving _SUCCESS marker).
-        java.nio.file.Files.deleteIfExists(p.resolve("_SUCCESS"))
-        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-    } catch { case e: Exception => System.err.println(s"[bench] sig corpus cleanup failed: $e") }
-
-  /** One timed signature-stage run (ST1 only) over the pre-materialized
-    * distinct-contents corpus: a pure narrow map over the MinHash/SimHash/
-    * band kernels — the dominant cluster-wide cost at 100 TB and the
-    * cleanest probe of compute scaling (one parquet scan from RAM-backed
-    * /dev/shm feeding whole-stage-codegen'd kernels; no shuffle). */
-  private def sigRunOnce(spark: SparkSession, corpusPath: String): (Long, Double) = {
-    import org.apache.spark.sql.functions.{bit_count, col, sum}
-    // ~2.5 GB compressed across 64 files: lower the split size so the scan
-    // yields ~160 tasks and local[32] is never partition-starved.
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
-    val contents = spark.read.parquet(corpusPath)
-    val docs = contents.count()
-    // warm-up (JIT of the kernels)
-    Pipeline.signatures(contents.limit(2000), SparkEntry.cfg)
-      .agg(sum(bit_count(col("simhash")))).collect()
-    val t0 = System.nanoTime()
-    Pipeline.signatures(contents, SparkEntry.cfg)
-      .agg(sum(bit_count(col("simhash")))).collect() // forces the expr, no overflow
-    (docs, (System.nanoTime() - t0) / 1e9)
-  }
+  /** Wall-clock budget for OPTIONAL work (extra reps): safely under any
+    * plausible driver timeout. */
+  private val BudgetSecs = 1500.0
+  private val QueryReps = 3
+  // Queries whose best time is still >= HeavyThreshold after the base reps
+  // get extra interleaved reps: one choppy VM window spanning 3 adjacent
+  // reps produced round-3's phantom "regressions" on exactly the >=2 s
+  // queries; more, later-in-time reps give the min a clean window to land.
+  private val HeavyReps = 3
+  private val HeavyThreshold = 1.5
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // Pipeline scaling corpus: sized so parallel compute dominates the
-    // ~3-6 s serial floor (driver planning + AQE rounds + shuffle-stage
-    // scheduling) the way production minutes-long stages would.
-    // 120k units (158.4k docs) is the measured sweet spot: large enough
-    // that compute dominates the ~3-4 s serial floor, below the local[32]
-    // cache-write bandwidth knee this VM shows at ~200k+ docs (BASELINE.md).
-    val scalingUnits = sys.env.getOrElse("SPARK_GRAFT_SCALE_UNITS", "120000").toLong
-    // Signature-stage corpus (1 unit = 1 distinct doc via
-    // PagesGen.syntheticContents): sized so the timed narrow map dominates
-    // the fixed per-job latency. 1M docs ≈ 10 s timed at local[32] and
-    // ~120 s at local[2] — halved from the 2-level era's 2M when local[2]
-    // joined the default levels (attempt 13: a 240 s local[2] sig rep plus
-    // corpus gen pushed the skeleton past the pipeline-extras gate, leaving
-    // the pipeline pair a single-rep estimate). The kernel is a narrow
-    // per-doc map, so docs/s is size-invariant and stays comparable.
-    val sigUnits = sys.env.getOrElse("SPARK_GRAFT_SIG_UNITS", "1000000").toLong
-    val sigTokensScale = sys.env.getOrElse("SPARK_GRAFT_SIG_TOKENS_SCALE", "4").toInt
-    val doScaling = sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") == "1"
-    // Wall-clock budget for OPTIONAL work (extra reps). Default 1500 s:
-    // safely under any plausible driver timeout; the mandatory skeleton
-    // plus progressive emission keeps the artifact complete even when a
-    // pathological VM window blows through it.
-    val budgetSecs = sys.env.getOrElse("SPARK_GRAFT_BUDGET_SECS", "1500").toDouble
-    def underShare(share: Double): Boolean = elapsedSecs < budgetSecs * share
+    val cpus = graft.util.LocalSession.cpus
+    def underShare(share: Double): Boolean = elapsedSecs < BudgetSecs * share
 
     def emit(json: String): Unit = {
       // Three delivery paths so the driver can machine-parse the result
       // even when a logger swallows or prefixes stdout lines: a
       // sentinel-prefixed copy, a file in the repo root, and — last on
       // stdout, with showSuccess := false suppressing sbt's footer — the
-      // bare JSON line. Every emission is a COMPLETE result for the work
-      // done so far under the one FINAL sentinel; later emissions
-      // supersede earlier ones (the driver reads the last line), so a
-      // kill at any point leaves the newest finished section recorded.
+      // bare JSON line.
       println(s"GRAFT_BENCH_JSON $json")
       try {
         java.nio.file.Files.write(java.nio.file.Paths.get("BENCH.json"),
@@ -174,30 +49,14 @@ object Bench {
       println(json)
     }
 
-    // ---- per-query timings FIRST (fast; emitted immediately so a harness
-    // kill mid-scaling loses nothing). Interleaved min-of-N (default 3),
-    // mirroring the scaling loop: the sandbox VM has multi-second
-    // hypervisor-steal episodes (BASELINE.md), and a single-shot timing
-    // lands whole bursts on whichever queries were running — min over
-    // interleaved repetitions is the noise-robust estimator of a query's
-    // true cost. A failed query is not retried. Rep rounds beyond the
-    // first are budget-gated (a degraded VM must not eat the scaling
-    // sections' budget on query reps).
-    val doQueries = sys.env.getOrElse("SPARK_GRAFT_QUERIES", "1") == "1"
-    val queryReps = sys.env.getOrElse("SPARK_GRAFT_QUERY_REPS", "3").toInt
-    // Queries whose best time is still >= heavyThreshold after the base reps
-    // get extra interleaved reps: one choppy VM window spanning 3 adjacent
-    // reps produced round-3's phantom "regressions" on exactly the >=2 s
-    // queries; more, later-in-time reps give the min a clean window to land.
-    val heavyReps = sys.env.getOrElse("SPARK_GRAFT_HEAVY_REPS", "3").toInt
-    val heavyThreshold = sys.env.getOrElse("SPARK_GRAFT_HEAVY_THRESHOLD", "1.5").toDouble
-    val spark = session(cpus)
+    // Interleaved min-of-N: the sandbox VM has multi-second hypervisor-steal
+    // episodes (BASELINE.md), and a single-shot timing lands whole bursts on
+    // whichever queries were running — min over interleaved repetitions is
+    // the noise-robust estimator of a query's true cost. A failed query is
+    // not retried. Rep rounds beyond the first are budget-gated.
+    val spark = graft.util.LocalSession(cpus, s"graft-bench-$cpus")
     val failed = scala.collection.mutable.ArrayBuffer[String]()
-    // Optional anchored-regex name filter for isolating individual queries
-    // (diagnostics only; the driver runs with no filter).
-    val queryFilter = sys.env.get("SPARK_GRAFT_QUERY_FILTER").map(_.r)
-    val names = (if (doQueries) SparkEntry.queries.toSeq.sortBy(_._1) else Nil)
-      .filter { case (n, _) => queryFilter.forall(_.matches(n)) }
+    val names = SparkEntry.queries.toSeq.sortBy(_._1)
     val qBest = scala.collection.mutable.LinkedHashMap[String, Double]()
     val qReps = scala.collection.mutable.LinkedHashMap[String, List[Double]]()
     def runQuery(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, rep: Int): Unit = {
@@ -215,14 +74,14 @@ object Bench {
         System.err.println(s"[bench] $name FAILED (rep $rep): ${e.getMessage}")
       }
     }
-    for (rep <- 1 to queryReps; (name, fn) <- names
+    for (rep <- 1 to QueryReps; (name, fn) <- names
          if !failed.contains(name) && (rep == 1 || underShare(0.25)))
       runQuery(name, fn, rep)
     val heavy = names.filter { case (n, _) =>
-      !failed.contains(n) && qBest.getOrElse(n, 0.0) >= heavyThreshold }
-    for (rep <- 1 to heavyReps; (name, fn) <- heavy
+      !failed.contains(n) && qBest.getOrElse(n, 0.0) >= HeavyThreshold }
+    for (rep <- 1 to HeavyReps; (name, fn) <- heavy
          if !failed.contains(name) && underShare(0.35))
-      runQuery(name, fn, queryReps + rep)
+      runQuery(name, fn, QueryReps + rep)
     spark.stop()
     val results = names.map { case (name, _) => name -> qBest.getOrElse(name, 0.0) }
     val qs = results.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
@@ -238,111 +97,8 @@ object Bench {
       else heavy.map { case (n, _) =>
         "\"" + n + "\":" + qReps.getOrElse(n, Nil).map(s => f"$s%.2f").mkString("[", ",", "]")
       }.mkString(""","query_rep_secs":{""", ",", "}")
-    def fullJson(scalingJson: String): String =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir"""" +
-      f""","budget_secs":$budgetSecs%.0f,"bench_elapsed_secs":$elapsedSecs%.1f""" +
-      f"""$failedJson$qRepsJson$scalingJson}"""
-    emit(fullJson("")) // queries-only result; superseded by later emissions
-
-    // ---- scaling evidence: same job, same input, at each local[N] level.
-    // Default 2,8,32 gives TWO N-vs-4N pairs in one artifact: 2→8 (cores
-    // quadruple while shared-DRAM bandwidth per core stays comfortable —
-    // the pair that models a real cluster, where 4N executors bring 4N×
-    // aggregate memory bandwidth) and 8→32 (cores quadruple into this
-    // box's bandwidth ceiling — the historical pair, kept for cross-round
-    // continuity). Measured attempt 12 (BASELINE.md): pipeline 0.910 and
-    // sig ≥0.76 at 2→8 vs 0.56/0.77 at 8→32 on identical code + input.
-    val levels = sys.env.getOrElse("SPARK_GRAFT_LEVELS", "2,8,32")
-      .split(",").map(_.trim.toInt).toSeq.distinct
-    if (doScaling) {
-      // Interleave levels across repetitions (fresh session each) and take
-      // the per-level minimum: the sandbox VM has multi-second noise
-      // episodes, and interleaving keeps one episode from biasing a level.
-      // ALL rep times are kept and emitted (rep_secs) so a noise episode is
-      // visible in the artifact itself, not just in the builder's notes.
-      // Defaults sized for the 3-level rounds (a local[2] pipeline run is
-      // ~100 s clean, a local[2] sig run ~200-270 s): a clean full run
-      // lands near the 1500 s budget; the shares gate off the rest.
-      val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-      val sigReps = sys.env.getOrElse("SPARK_GRAFT_SIG_REPS", "2").toInt
-      val repSecs = scala.collection.mutable.Map[Int, List[Double]]().withDefaultValue(Nil)
-      val sigRepSecs = scala.collection.mutable.Map[Int, List[Double]]().withDefaultValue(Nil)
-      var docs = 0L
-      var sigDocs = 0L
-
-      /** Scaling JSON from whatever reps have completed so far (the
-        * emit-after-every-rep-round contract needs this buildable at any
-        * prefix of the loop; the sig block appears once it has data). */
-      def scalingJsonNow(): String = {
-        def section(rs: collection.Map[Int, List[Double]], d: Long): String = {
-          val asc = levels.sorted
-          val best = asc.filter(rs(_).nonEmpty).map(n => n -> rs(n).min).toMap
-          val measured = asc.filter(best.contains)
-          val per = measured.map { n =>
-            val r = rs(n).map(s => f"$s%.2f").mkString("[", ",", "]")
-            f""""local$n":{"sec":${best(n)}%.2f,"docs_per_sec":${d / best(n)}%.1f,"rep_secs":$r}""" }.mkString(",")
-          // One efficiency per adjacent measured pair (2→8 and 8→32 at the
-          // default levels): (throughput_hi / throughput_lo) / (cores_hi /
-          // cores_lo). The 2→8 pair is the north-rule N-vs-4N evidence.
-          val effs = measured.zip(measured.drop(1)).map { case (a, b) =>
-            f""","efficiency_${a}_to_${b}":${((d / best(b)) / (d / best(a))) / (b.toDouble / a)}%.3f""" }.mkString
-          val thr =
-            if (measured.isEmpty) ""
-            else measured.map(n => f""""local$n":${d / best(n)}%.1f""")
-              .mkString(""","throughput_docs_per_sec":{""", ",", "}")
-          s""""docs":$d,$per$effs$thr"""
-        }
-        val sig =
-          if (sigRepSecs.values.forall(_.isEmpty)) ""
-          else s""","sig_stage":{${section(sigRepSecs, sigDocs)}}"""
-        s""","scaling":{${section(repSecs, docs)}$sig}"""
-      }
-
-      // Within a round, levels run FASTEST (most cores) first: a kill
-      // mid-round then strands only the slow small-N run, and the level
-      // whose walls feed the cross-round query/throughput comparisons is
-      // already recorded. Interleaving across rounds is unchanged.
-      val roundOrder = levels.sortBy(-_)
-      def pipelineRound(): Unit = {
-        for (n <- roundOrder) {
-          val s = session(n)
-          val (d, sec) = pipelineRunOnce(s, scalingUnits)
-          s.stop()
-          docs = d
-          repSecs(n) = repSecs(n) :+ sec
-        }
-        emit(fullJson(scalingJsonNow()))
-      }
-      def sigRound(corpus: String): Unit = {
-        for (n <- roundOrder) {
-          val s = session(n)
-          val (d, sec) = sigRunOnce(s, corpus)
-          s.stop()
-          sigDocs = d
-          sigRepSecs(n) = sigRepSecs(n) :+ sec
-        }
-        emit(fullJson(scalingJsonNow()))
-      }
-
-      // MANDATORY SKELETON FIRST: one pipeline round, then one sig round —
-      // before ANY optional repetition. A driver timeout that lands during
-      // the extras then still leaves BOTH scaling sections populated in the
-      // last emission (round-4 lesson's second half: the old order ran all
-      // pipeline extras before the first sig rep, so a kill in the extras
-      // stranded the sig section with zero data).
-      pipelineRound()
-      val corpus = ensureSigCorpus(sigUnits, sigTokensScale)
-      try {
-        sigRound(corpus)
-        // Optional extras, budget-gated; emit after every completed round —
-        // a kill strands one round max. Pipeline extras first (the noisier
-        // estimator needs the reps more), sig extras with the rest.
-        for (rep <- 2 to reps if underShare(0.65)) pipelineRound()
-        for (rep <- 2 to sigReps if underShare(0.90)) sigRound(corpus)
-      } finally {
-        if (sys.env.getOrElse("SPARK_GRAFT_KEEP_SIG_CORPUS", "0") != "1")
-          deleteSigCorpus(corpus)
-      }
-    }
+    emit(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir"""" +
+      f""","budget_secs":$BudgetSecs%.0f,"bench_elapsed_secs":$elapsedSecs%.1f""" +
+      f"""$failedJson$qRepsJson}""")
   }
 }

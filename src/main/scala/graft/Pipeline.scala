@@ -577,20 +577,20 @@ object Pipeline {
     val metrics = scala.collection.mutable.ArrayBuffer[StageMetrics]()
     var prevRows = -1L // rows_in of stage N = rows_out of stage N-1
 
-    def stage(name: String, dropped: Long = 0L)(compute: => DataFrame): DataFrame = {
+    def stage(name: String)(compute: => DataFrame): DataFrame = {
       io.load(spark, name) match {
         case Some((df, m)) =>
           // rows_in is the PREVIOUS stage's row count even for a loaded
           // stage — filling it with the stage's own rowCount would make
           // every resumed stage report selectivity 1.0 in the lineage.
-          metrics += StageMetrics(name, m.snapshotId, -1, prevRows, m.rowCount, 0, 0, 0, m.configHash)
+          metrics += StageMetrics(name, m.snapshotId, prevRows, m.rowCount, 0, 0, m.configHash)
           prevRows = m.rowCount
           df
         case None =>
           val t0 = System.nanoTime()
           val (df, m) = io.commit(compute, name)
           val wallMs = (System.nanoTime() - t0) / 1000000
-          metrics += StageMetrics(name, m.snapshotId, -1, prevRows, m.rowCount, dropped, 0, wallMs, m.configHash)
+          metrics += StageMetrics(name, m.snapshotId, prevRows, m.rowCount, 0, wallMs, m.configHash)
           prevRows = m.rowCount
           df
       }

@@ -182,34 +182,13 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
   }
 }
 
-/** In-memory IO: nothing is durable, but stages in `cached` are lazily
-  * local-checkpointed so downstream stages that branch from them (e.g. ST1
-  * signatures and ST3 contents both read ST0) share one materialization
-  * instead of recomputing the lineage per branch — the in-memory analog of
-  * the durable per-stage snapshot.
-  *
-  * Caching is selective because cache WRITES are not free: on a
-  * memory-bandwidth-bound host, re-materializing the full-text tables into
-  * block storage competes with the compute it is meant to save. Stages
-  * consumed exactly once per action, or only within one job (where
-  * Catalyst's exchange reuse already dedups the shuffle), can skip the
-  * cache entirely. */
-class SelectiveCacheIO(cached: Set[String],
-    storageLevel: Option[org.apache.spark.storage.StorageLevel] = None) extends TableIO {
+/** Default in-memory IO: nothing is durable, but every stage is lazily
+  * local-checkpointed so downstream stages that branch from it (e.g. ST1
+  * signatures and ST3 verify both read ST0b contents) share one
+  * materialization instead of recomputing the lineage per branch — the
+  * in-memory analog of the durable per-stage snapshot. */
+object NoCheckpointIO extends TableIO {
   override def load(spark: SparkSession, stage: String): Option[(DataFrame, Manifest)] = None
-  override def commit(df: DataFrame, stage: String): (DataFrame, Manifest) = {
-    val out =
-      if (!(cached.contains("*") || cached.contains(stage))) df
-      else storageLevel match {
-        // serialized (+compressed via spark.rdd.compress) trades CPU for
-        // bytes through the block store — the right trade on a
-        // memory-bandwidth-bound host
-        case Some(lvl) => df.localCheckpoint(false, lvl)
-        case None      => df.localCheckpoint(false)
-      }
-    (out, Manifest("in-memory", "none", -1L, stage))
-  }
+  override def commit(df: DataFrame, stage: String): (DataFrame, Manifest) =
+    (df.localCheckpoint(false), Manifest("in-memory", "none", -1L, stage))
 }
-
-/** Default in-memory IO: every stage lazily checkpointed. */
-object NoCheckpointIO extends SelectiveCacheIO(Set("*"))

@@ -187,11 +187,9 @@ final case class ClusterMember(
 final case class StageMetrics(
     stage: String,
     snapshot_id: String,
-    partition_id: Int, // -1 = stage-level
     rows_in: Long,
     rows_out: Long,
     dropped_by_guard: Long,
-    bytes: Long,
     wall_ms: Long,
     config_hash: String,
     /** ST2 only: band groups salted into buckets (partial in-band pairing)

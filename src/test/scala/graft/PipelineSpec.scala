@@ -273,6 +273,17 @@ class PipelineSpec extends SparkSpec {
     assert(result.metrics.forall(_.wall_ms >= 0))
   }
 
+  test("default IO lazily checkpoints every stage output") {
+    // A LogicalRDD root means downstream branches share the stage's one
+    // materialization: ST1 and ST3 both read ST0b without re-running it.
+    val outputs = Seq(result.extracted, result.signatures, result.candidates,
+      result.verified, result.clusters, result.report)
+    outputs.foreach { df =>
+      val root = df.queryExecution.analyzed
+      assert(root.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD], root.nodeName)
+    }
+  }
+
   test("cfg.canonicalizeUrls collapses spelled url variants before grouping") {
     import spark.implicits._
     val t1 = (1 to 60).map(i => s"cu$i").mkString(" ")
