@@ -4,8 +4,8 @@ import java.nio.charset.StandardCharsets
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path,
-  UnsupportedFileSystemException}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileStatus, FileSystem, Options,
+  Path, UnsupportedFileSystemException}
 
 /** Hadoop-FileSystem primitives shared by the durable stores
   * (ParquetSnapshotIO, ConnectedComponents' per-iteration label store,
@@ -198,6 +198,11 @@ private[graft] object FsOps {
     * a plain directory list. */
   def fileCount(conf: Configuration, p: Path): Int =
     if (!exists(conf, p)) 0 else rawFs(conf, p).listStatus(p).count(_.isFile)
+
+  /** Regular files directly under `p` (empty if `p` is absent). */
+  def listFiles(conf: Configuration, p: Path): Seq[FileStatus] =
+    if (!exists(conf, p)) Nil
+    else fs(conf, p).listStatus(p).filter(_.isFile).toSeq
 
   /** Immediate subdirectories of `p` (empty if `p` is absent). */
   def listDirs(conf: Configuration, p: Path): Seq[Path] =

@@ -28,8 +28,9 @@ import org.apache.spark.sql.functions._
   *               `snapshot-property.*` write options carrying the manifest
   *   - load    = filter `.snapshots` on `summary['config_hash']`, then
   *               time-travel read via the `snapshot-id` reader option
-  *   - metrics = the same per-partition lineage rows, appended to a
-  *               sibling `<stage>_metrics` Iceberg table
+  *   - metrics = per-partition lineage rows in the shared
+  *               [[TableIO.lineageSchema]], appended to a sibling
+  *               `<stage>_metrics` Iceberg table
   */
 final class IcebergIO(catalog: String, namespace: String, configHash: String)
     extends TableIO {
@@ -87,13 +88,20 @@ final class IcebergIO(catalog: String, namespace: String, configHash: String)
       .select(col("snapshot_id")).limit(1).collect()
       .headOption.map(_.getLong(0).toString).getOrElse("iceberg-unknown")
     val committed = spark.read.format("iceberg").load(tbl(stage))
-    // Per-partition lineage rows (north-rule requirement, SURVEY §7.6) —
-    // the SHARED TableIO.lineageRows derivation (one schema with
-    // ParquetSnapshotIO, maintained in one place), APPENDED (create on
-    // first commit) so the metrics table is a queryable history across
-    // resumes and config changes, keyed by (stage, config_hash,
-    // snapshot_id) per row.
-    val metricRows = TableIO.lineageRows(committed, stage, configHash, snapshotId).cache()
+    // Per-partition lineage rows (north-rule requirement, SURVEY §7.6) in
+    // the SHARED TableIO.lineageSchema (one column set with
+    // ParquetSnapshotIO, maintained in one place): a row count per read
+    // partition of the committed table, APPENDED (create on first commit)
+    // so the metrics table is a queryable history across resumes and
+    // config changes, keyed by (stage, config_hash, snapshot_id) per row.
+    val lineage = committed
+      .groupBy(spark_partition_id().as("partition_id"))
+      .agg(count(lit(1)).as("rows_out"))
+      .withColumn("stage", lit(stage))
+      .withColumn("snapshot_id", lit(snapshotId))
+      .withColumn("config_hash", lit(configHash))
+      .withColumn("committed_ms", lit(System.currentTimeMillis()))
+    val metricRows = lineage.select(TableIO.lineageSchema.fieldNames.toSeq.map(col): _*).cache()
     val metricsTable = tbl(s"${stage}_metrics")
     if (spark.catalog.tableExists(metricsTable))
       metricRows.writeTo(metricsTable).append()

@@ -1,7 +1,10 @@
 package graft.checkpoint
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types._
 
 /** Per-stage checkpoint storage with atomic manifest commits (ST* resume).
   *
@@ -39,32 +42,37 @@ trait TableIO {
 }
 
 object TableIO {
-  /** Canonical per-partition lineage rows for a committed snapshot — ONE
-    * schema and derivation shared by every durable impl (ParquetSnapshotIO,
-    * IcebergIO), so the metrics stores can never drift apart. One row per
-    * read partition of the committed files (north-rule §7.6). */
-  def lineageRows(committed: DataFrame, stage: String, configHash: String,
-      snapshotId: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    committed
-      .groupBy(spark_partition_id().as("partition_id"))
-      .agg(count(lit(1)).as("rows_out"))
-      .withColumn("stage", lit(stage))
-      .withColumn("snapshot_id", lit(snapshotId))
-      .withColumn("config_hash", lit(configHash))
-      .withColumn("committed_ms", lit(System.currentTimeMillis()))
-      .select("stage", "snapshot_id", "partition_id", "rows_out", "config_hash", "committed_ms")
-  }
+  /** The lineage table of a committed stage — ONE column set for every
+    * durable impl (ParquetSnapshotIO.metrics, IcebergIO's metrics table),
+    * so the metrics stores can never drift apart (north-rule §7.6). */
+  val lineageSchema: StructType = StructType(Seq(
+    StructField("stage", StringType, nullable = false),
+    StructField("snapshot_id", StringType, nullable = false),
+    StructField("partition_id", IntegerType, nullable = false),
+    StructField("rows_out", LongType, nullable = false),
+    StructField("config_hash", StringType, nullable = false),
+    StructField("committed_ms", LongType, nullable = false)))
 }
 
+/** The commit record of a stage. `schema` (the snapshot's schema JSON),
+  * `fileRows` ((partition id, row count) per written part file, stored as
+  * `"<id>:<rows>,..."` in the flat record) and
+  * `committedMs` are written together by [[ParquetSnapshotIO]]; a record
+  * in the older 4-field format has `schema = None` and no lineage. */
 final case class Manifest(
     snapshotId: String,
     configHash: String,
     rowCount: Long,
-    stage: String
+    stage: String,
+    schema: Option[String] = None,
+    fileRows: Seq[(Int, Long)] = Nil,
+    committedMs: Long = 0L
 ) {
   private[checkpoint] def fields: Seq[(String, Any)] = Seq("snapshot_id" -> snapshotId,
-    "config_hash" -> configHash, "row_count" -> rowCount, "committed_at_stage" -> stage)
+    "config_hash" -> configHash, "row_count" -> rowCount, "committed_at_stage" -> stage) ++
+    schema.toSeq.flatMap(s => Seq("schema" -> s,
+      "file_rows" -> fileRows.map { case (p, n) => s"$p:$n" }.mkString(","),
+      "committed_ms" -> committedMs))
   def toJson: String = FsOps.renderRecord(fields: _*)
 }
 
@@ -76,14 +84,22 @@ object Manifest {
       ch <- kv.get("config_hash")
       rc <- kv.get("row_count")
       st <- kv.get("committed_at_stage")
-    } yield Manifest(sid, ch, rc.toLong, st)
+    } yield Manifest(sid, ch, rc.toLong, st, kv.get("schema"),
+      kv.get("file_rows").filter(_.nonEmpty).toSeq.flatMap(_.split(',')).map { e =>
+        val Array(p, n) = e.split(':'); (p.toInt, n.toLong)
+      },
+      kv.get("committed_ms").fold(0L)(_.toLong))
 }
 
 /** Directory-per-stage Parquet snapshots under `root`, keyed by configHash.
-  * Every commit also writes a per-partition lineage/metrics table
-  * `<stage>/<snapshot>_metrics` with one row per written partition
-  * (north-rule requirement, SURVEY §7.6): the durable generalization of the
-  * reference's atomic progress counters (process_matches.rs:85-96).
+  * A commit is ONE Spark job, the data write. Its lineage (SURVEY §7.6:
+  * one row per written part file, the durable generalization of the
+  * reference's atomic progress counters, process_matches.rs:85-96) comes
+  * from the written files' parquet footers on the driver — the analog of
+  * Iceberg's data-file `record_count` — and travels in the commit record
+  * with the snapshot's schema, so re-reads (the commit's own and `load`)
+  * skip schema inference. [[metrics]] rebuilds the lineage table from the
+  * record.
   *
   * `root` may be on any Hadoop filesystem (file://, hdfs://, abfs://, or
   * scheme-less = the default FS): manifest/GC operations go through
@@ -125,25 +141,35 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
       .filter(_.configHash == configHash) // stale-config snapshots are ignored
       .flatMap { m =>
         val data = new Path(stageDir(stage), m.snapshotId)
-        if (FsOps.exists(conf, data)) Some((spark.read.parquet(data.toString), m))
+        // a 4-field legacy record carries no schema: infer it from the files
+        val reader = m.schema.fold(spark.read)(s =>
+          spark.read.schema(DataType.fromJson(s).asInstanceOf[StructType]))
+        if (FsOps.exists(conf, data)) Some((reader.parquet(data.toString), m))
         else None
       }
   }
 
-  /** Per-partition metrics of a committed snapshot (resolved through the
-    * manifest — snapshot ids are unique per commit, see commit()). */
+  /** Lineage of the committed snapshot of `stage` ([[TableIO.lineageSchema]],
+    * one row per written part file), rebuilt from its commit record. A
+    * stage committed in the legacy record format reads its
+    * `<snapshot>_metrics` table instead. */
   def metrics(spark: SparkSession, stage: String): Option[DataFrame] = {
     val conf = hconf(spark)
-    FsOps.readRecord(conf, manifestPath(stage)).flatMap(Manifest.fromRecord)
-      .map(m => new Path(stageDir(stage), s"${m.snapshotId}_metrics"))
-      .filter(FsOps.exists(conf, _))
-      .map(p => spark.read.parquet(p.toString))
+    FsOps.readRecord(conf, manifestPath(stage)).flatMap(Manifest.fromRecord).flatMap {
+      case m if m.schema.isDefined =>
+        import scala.jdk.CollectionConverters._
+        val rows = m.fileRows.map { case (p, n) =>
+          Row(m.stage, m.snapshotId, p, n, m.configHash, m.committedMs) }
+        Some(spark.createDataFrame(rows.asJava, TableIO.lineageSchema))
+      case m =>
+        Some(new Path(stageDir(stage), s"${m.snapshotId}_metrics"))
+          .filter(FsOps.exists(conf, _)).map(p => spark.read.parquet(p.toString))
+    }
   }
 
   override def commit(df: DataFrame, stage: String): (DataFrame, Manifest) = {
     val spark = df.sparkSession
     val conf = hconf(spark)
-    import org.apache.spark.sql.functions._
     // UNIQUE snapshot dir per commit: writing in place under the id the
     // current manifest references would delete the only durable copy
     // before the replacement finishes (a crash mid-rewrite would leave the
@@ -155,30 +181,32 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
     val dir = stageDir(stage)
     FsOps.mkdirs(conf, dir)
     val dataPath = new Path(dir, snapshotId)
-    df.write.mode("overwrite").parquet(dataPath.toString)
+    df.write.mode("overwrite").parquet(dataPath.toString) // the commit's one job
 
-    // Per-partition lineage rows over the durable snapshot (one light job:
-    // a row count per read partition of the committed files).
-    val committed = spark.read.parquet(dataPath.toString)
-    val perPart = TableIO.lineageRows(committed, stage, configHash, snapshotId).cache()
-    perPart.write.mode("overwrite").parquet(new Path(dir, s"${snapshotId}_metrics").toString)
-    val rows = Option(perPart.agg(sum(col("rows_out"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L) // empty snapshot -> 0
-    perPart.unpersist()
-
-    val m = Manifest(snapshotId, configHash, rows, stage)
+    // Lineage without a job: one (partition id, rows) per written part
+    // file, read from its footer. Spark names part files
+    // `part-<partition id>-<job uuid>-c<n>...`.
+    val fileRows = FsOps.listFiles(conf, dataPath)
+      .filter(_.getPath.getName.startsWith("part-")).sortBy(_.getPath.getName)
+      .map { f =>
+        val name = f.getPath.getName
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try name.substring(5, name.indexOf('-', 5)).toInt -> reader.getRecordCount
+        finally reader.close()
+      }
+    val m = Manifest(snapshotId, configHash, fileRows.map(_._2).sum, stage,
+      Some(df.schema.json), fileRows, System.currentTimeMillis())
     FsOps.writeRecord(conf, manifestPath(stage), m.fields: _*)
     // GC every snapshot dir the manifest no longer references — superseded
-    // commits AND stale-config leftovers (previously stranded forever; the
-    // same single-writer-per-checkpoint-root assumption the st4_cc sweep
-    // documents). A crash before the swing leaves the new dirs orphaned
-    // and the old manifest intact; a crash mid-GC leaves sweepable dirs —
-    // both healed by the next commit's GC.
+    // commits, stale-config leftovers and legacy `<snapshot>_metrics`
+    // tables (the same single-writer-per-checkpoint-root assumption the
+    // st4_cc sweep documents). A crash before the swing leaves the new dir
+    // orphaned and the old manifest intact; a crash mid-GC leaves
+    // sweepable dirs — both healed by the next commit's GC.
     FsOps.listDirs(conf, dir)
-      .filter(p => p.getName.startsWith("snap-")
-        && !Set(snapshotId, s"${snapshotId}_metrics").contains(p.getName))
+      .filter(p => p.getName.startsWith("snap-") && p.getName != snapshotId)
       .foreach(FsOps.deleteRecursive(conf, _)) // best effort; next commit resweeps
-    (committed, m)
+    (spark.read.schema(df.schema).parquet(dataPath.toString), m)
   }
 }
 

@@ -66,17 +66,20 @@ object ConnectedComponents {
       return runLocal(spark, cached.as[(Long, Long)].collect())
     }
 
-    val sym = cached.union(cached.select($"dst".as("src"), $"src".as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-
     // Durable-resume bookkeeping: labels keyed by an order-independent hash
     // of the (symmetrized) edge set, committed per iteration via atomic
-    // manifest rename. XOR aggregation — no ANSI sum-overflow hazard.
+    // manifest rename. XOR aggregation — no ANSI sum-overflow hazard. The
+    // hash is observed on the eager checkpoint's own job, not a second
+    // action over the edges.
+    val edgeObs = Observation(s"cc_edges_${System.identityHashCode(cached)}")
+    val symEdges = cached.union(cached.select($"dst".as("src"), $"src".as("dst")))
+      .distinct()
+    val sym = durableDir.fold(symEdges)(_ => symEdges.observe(edgeObs,
+      bit_xor(xxhash64($"src", $"dst")).as("hash"), count(lit(1)).as("n")))
+      .localCheckpoint(true)
     val durable = durableDir.map { dir =>
-      val row = sym.agg(
-        bit_xor(xxhash64($"src", $"dst")), count(lit(1))).head()
-      new DurableLabels(dir, f"${row.getLong(0)}%016x-${row.getLong(1)}")
+      val row = edgeObs.get
+      new DurableLabels(dir, f"${row("hash").asInstanceOf[Long]}%016x-${row("n")}")
     }
 
     var startIter = 0
@@ -191,7 +194,7 @@ object ConnectedComponents {
       FsOps.listDirs(conf, root)
         .filter(d => d.getName.startsWith("labels-iter") && d.getName != p.getName)
         .foreach(FsOps.deleteRecursive(conf, _))
-      labels.sparkSession.read.parquet(p.toString)
+      labels.sparkSession.read.schema(labels.schema).parquet(p.toString)
     }
   }
 

@@ -442,10 +442,17 @@ object IncrementalDedup {
     // unchanged-bindings check — at most one row per batch (a crash in the
     // one instant between swap and append loses the audit row for that
     // batch; an at-most-once audit beats contradictory duplicates).
+    // The five row counts in ONE single-stage job: tag each table's rows
+    // with its index and sum per tag in an RDD aggregate (no shuffle, so no
+    // AQE stage jobs either).
+    val counted = Seq(newPairs, crossPairs, newVerified, crossExactVerified, crossEstVerified)
+    val n = counted.zipWithIndex.map { case (df, i) => df.select(lit(i)) }
+      .reduce(_ union _).as[Int].rdd
+      .aggregate(new Array[Long](counted.size))(
+        (acc, i) => { acc(i) += 1; acc },
+        (a, b) => { a.indices.foreach(j => a(j) += b(j)); a })
     val metricsRow =
-      Seq((batchId, newPairs.count(), crossPairs.count(),
-        newVerified.count() + crossExactVerified.count(), crossEstVerified.count(),
-        System.currentTimeMillis()))
+      Seq((batchId, n(0), n(1), n(2) + n(3), n(4), System.currentTimeMillis()))
         .toDF("batch_id", "candidates_new", "candidates_cross",
           "edges_exact_verified", "edges_est_only", "committed_ms")
 

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.checkpoint.{Manifest, ParquetSnapshotIO}
+import org.apache.spark.sql.types.DataType
 import graft.fixtures.PagesGen
 import graft.model.GraftConfig
 
@@ -22,6 +23,94 @@ class ResumeSpec extends SparkSpec {
   test("manifest json round-trips") {
     val m = Manifest("snap-abc", "deadbeef", 12345L, "st2_candidates")
     assert(Manifest.fromJson(m.toJson).contains(m))
+  }
+
+  test("manifest with schema and lineage round-trips through quotes and escapes") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("q\"uo\\te\n{\"a\": 1}", StringType),
+      StructField("é,:}", ArrayType(LongType), nullable = false,
+        new MetadataBuilder().putString("comment", "it's \"x\"\t").build()))).json
+    val m = Manifest("snap-abc", "deadbeef", 12L, "st2_candidates", Some(schema),
+      Seq(0 -> 5L, 3 -> 7L, 3 -> 0L), 1700000000000L)
+    assert(Manifest.fromJson(m.toJson).contains(m))
+    assert(DataType.fromJson(Manifest.fromJson(m.toJson).get.schema.get).json == schema)
+  }
+
+  test("commit of a materialized DataFrame submits one job; load of a committed stage none") {
+    import org.apache.spark.graftshim.JobCounter.jobsOf
+    val root = Files.createTempDirectory("graft-jobs").toString
+    val io = new ParquetSnapshotIO(root, cfg.configHash)
+    val df = Pipeline.extract(PagesGen.pages(spark, spec), cfg).localCheckpoint(true)
+    val ((committed, m), commitJobs) = jobsOf(spark.sparkContext)(io.commit(df, "st0_extracted"))
+    assert(commitJobs == 1, s"commit submitted $commitJobs jobs")
+    val (loaded, loadJobs) = jobsOf(spark.sparkContext)(io.load(spark, "st0_extracted"))
+    assert(loadJobs == 0, s"load submitted $loadJobs jobs")
+    // the schema carried by the record is the one inference would find
+    val inferred = spark.read.parquet(s"$root/st0_extracted/${m.snapshotId}").schema
+    assert(committed.schema == inferred && loaded.get._1.schema == inferred)
+    assert(m.rowCount == df.count() && loaded.get._1.count() == m.rowCount)
+  }
+
+  test("lineage has one row per written part file, summing to the manifest row count") {
+    import org.apache.spark.sql.functions.col
+    import graft.checkpoint.TableIO
+    val root = Files.createTempDirectory("graft-lineage").toString
+    val io = new ParquetSnapshotIO(root, cfg.configHash)
+    // 5 partitions, 1 and 3 empty: Spark writes no file for them
+    val df = spark.range(0, 1000, 1, 5).toDF("id").where(col("id") % 400 < 200)
+    val (_, m) = io.commit(df, "st_lineage")
+    import scala.jdk.CollectionConverters._
+    val partFiles = Files.list(java.nio.file.Paths.get(root, "st_lineage", m.snapshotId))
+      .iterator().asScala.map(_.getFileName.toString).count(_.startsWith("part-"))
+    val lineage = io.metrics(spark, "st_lineage").get
+    assert(lineage.schema == TableIO.lineageSchema)
+    val rows = lineage.collect()
+    assert(rows.length == partFiles && partFiles == 3)
+    assert(rows.map(_.getAs[Int]("partition_id")).sorted.toSeq == Seq(0, 2, 4))
+    assert(rows.map(_.getAs[Long]("rows_out")).sum == m.rowCount && m.rowCount == 600L)
+    assert(rows.forall(r => r.getAs[String]("snapshot_id") == m.snapshotId
+      && r.getAs[Long]("committed_ms") == m.committedMs))
+  }
+
+  test("a root with legacy 4-field manifests resumes every stage and keeps its metrics tables") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.Paths
+    import graft.checkpoint.TableIO
+    import org.apache.spark.sql.Row
+    val root = Files.createTempDirectory("graft-legacy").toString
+    val pages = PagesGen.pages(spark, spec)
+    val r1 = Pipeline.run(spark, pages, cfg, new ParquetSnapshotIO(root, cfg.configHash))
+    val rep1 = r1.report.collect().map(_.toString).sorted
+    // rewrite every stage's record as the older format wrote it: the four
+    // manifest fields, lineage in a `<snapshot>_metrics` table beside it
+    val stages = r1.metrics.map(_.stage)
+    stages.foreach { stage =>
+      val m = r1.metrics.find(_.stage == stage).get
+      Files.write(Paths.get(root, stage, "_manifest.json"),
+        (s"""{"snapshot_id": "${m.snapshot_id}", "config_hash": "${cfg.configHash}", """ +
+          s""""row_count": ${m.rows_out}, "committed_at_stage": "$stage"}""").getBytes(UTF_8))
+      spark.createDataFrame(java.util.List.of(
+        Row(stage, m.snapshot_id, 0, m.rows_out, cfg.configHash, 42L)), TableIO.lineageSchema)
+        .write.parquet(Paths.get(root, stage, s"${m.snapshot_id}_metrics").toString)
+    }
+    val io = new ParquetSnapshotIO(root, cfg.configHash)
+    assert(io.load(spark, "st0_extracted").get._2.schema.isEmpty)
+    val r2 = Pipeline.run(spark, pages, cfg, io)
+    assert(r2.metrics.forall(_.wall_ms == 0),
+      s"stages not resumed: ${r2.metrics.filter(_.wall_ms > 0).map(_.stage)}")
+    assert(rep1.sameElements(r2.report.collect().map(_.toString).sorted))
+    stages.foreach { stage =>
+      val rows = io.metrics(spark, stage).get.collect()
+      assert(rows.map(_.getAs[Long]("committed_ms")).toSeq == Seq(42L), s"$stage: legacy metrics not read")
+    }
+    // the next commit of a stage records its lineage and sweeps the legacy table
+    val legacyId = r1.metrics.head.snapshot_id
+    val (df, m) = io.load(spark, "st0_extracted").get
+    io.commit(df, "st0_extracted")
+    assert(!Files.exists(Paths.get(root, "st0_extracted", s"${legacyId}_metrics")))
+    assert(io.metrics(spark, "st0_extracted").get.collect()
+      .map(_.getAs[Long]("rows_out")).sum == m.rowCount)
   }
 
   test("second run resumes every stage from committed snapshots") {
